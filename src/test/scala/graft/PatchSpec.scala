@@ -356,4 +356,68 @@ class PatchSpec extends SparkSpecBase {
     val m = Versioned.read(spark, root).as[(Long, String)].collect().toMap
     assert((m(1L) === "writer A" || m(1L) === "writer B") && m(9L) === "fine")
   }
+
+  test("patch refusals: duplicate keys, empty drop, changed-rows gate, validation, zone type") {
+    val checks = Seq(
+      graft.quality.Validate.NotNull("id_not_null", col("doc_id")),
+      graft.quality.Validate.Unique("id_unique", Seq(col("doc_id"))))
+    val root = freshRoot()
+    assert(Versioned.promoteBucketed(baseDocs(10), root, "doc_id", 4, checks).promoted)
+    def pinned(what: String): Unit = {
+      assert(Versioned.currentManifest(root).map(_.version) === Some(1), what)
+      assert(Versioned.currentManifest(root).flatMap(_.buckets).map(_.deltas) === Some(Nil), what)
+      assert(Versioned.read(spark, root).count() === 10, what)
+    }
+
+    val e1 = intercept[IllegalArgumentException](Versioned.patch(
+      drop((1L, "x", false), (1L, "y", true)), root, deleted = col("del")))
+    assert(e1.getMessage.contains("duplicate"), e1.getMessage)
+    pinned("duplicate keys")
+
+    val e2 = intercept[IllegalArgumentException](Versioned.patch(
+      drop((1L, "x", false)).limit(0), root, deleted = col("del")))
+    assert(e2.getMessage.contains("empty drop"), e2.getMessage)
+    pinned("empty drop")
+
+    // gate: 5 of 10 live keys move > 200 per mille
+    val big = drop((1L to 5L).map(j => (j, s"d$j v2", false)): _*)
+    val r1 = Versioned.patch(big, root, deleted = col("del"), checks = checks,
+      maxChangedPerMille = Some(200L))
+    assert(!r1.patched && r1.reason.exists(_.contains("merge gate")), r1)
+    pinned("changed-rows gate")
+
+    // validation: a null key in the staged layer is refused
+    val bad = Seq((Option.empty[Long], Option("x"), false)).toDF("doc_id", "text", "del")
+    val r2 = Versioned.patch(bad, root, deleted = col("del"), checks = checks)
+    assert(!r2.patched && r2.reason.exists(_.contains("id_not_null")), r2)
+    pinned("validation")
+
+    val leftovers = new File(root).listFiles().map(_.getName).filter(_.startsWith("_staging"))
+    assert(leftovers.isEmpty, leftovers.toSeq)
+
+    // merge shares the intake but keeps accepting an empty drop (the
+    // fold path hands it one): a committed no-op publish
+    val m = Versioned.merge(drop((1L, "x", false)).limit(0), root, deleted = col("del"))
+    assert(m.merged && (m.upserted, m.inserted, m.deleted) === ((0L, 0L, 0L)), m)
+    assert(Versioned.read(spark, root).count() === 10)
+
+    // a legacy manifest's unsupported zone type is refused at ENTRY
+    val zroot = freshRoot()
+    val base = Seq((1L, 0.5, "a"), (2L, 1.5, "b"), (3L, 2.5, "c"))
+      .toDF("doc_id", "score", "text")
+    assert(Versioned.promoteBucketed(base, zroot, "doc_id", 4,
+      zoneCols = Seq("doc_id")).promoted)
+    // a pre-r14 publish accepted a DOUBLE zone column: rig the manifest
+    val mf = new File(zroot, "_manifest.json")
+    val rigged = new String(Files.readAllBytes(mf.toPath), "UTF-8")
+      .replace(""""zones": ["doc_id"]""", """"zones": ["score"]""")
+    assert(rigged.contains(""""zones": ["score"]"""), "manifest rewrite must take")
+    Files.write(mf.toPath, rigged.getBytes("UTF-8"))
+    val d = Seq((4L, 3.5, "d", false)).toDF("doc_id", "score", "text", "del")
+    val e3 = intercept[RuntimeException](Versioned.patch(d, zroot, deleted = col("del")))
+    assert(e3.getMessage.contains("republish") && e3.getMessage.contains("score"), e3.getMessage)
+    val orphans = new File(zroot).listFiles().map(_.getName).filter(_.startsWith("_staging"))
+    assert(orphans.isEmpty, orphans.toSeq)
+    assert(Versioned.currentManifest(zroot).map(_.version) === Some(1))
+  }
 }
