@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): run every SparkEntry query on
   * $SPARK_GRAFT_SF_DIR, print ONE JSON timing line.
   *
@@ -9,20 +7,17 @@ import org.apache.spark.sql.SparkSession
   * parquet footer caches so the timed numbers reflect steady-state
   * operator cost (what a long-running cluster job sees), not
   * first-query JVM warmup.
+  *
+  * A query that throws in either timed pass is a FAILURE, never a
+  * timing: it is listed under `"failed"` in both the full map and the
+  * compact line, left out of `total`, and the run exits non-zero
+  * after printing.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+    val spark = GraftSession.builder(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -40,20 +35,28 @@ object Bench {
 
     // two timed passes, min per query: steady-state cost with GC /
     // JIT-tier noise (measured ±40% run-to-run on single passes) out
-    def timedPass(): Map[String, Double] = names.map { name =>
+    // a pass maps each query to its seconds, or None when it threw
+    def timedPass(): Map[String, Option[Double]] = names.map { name =>
       val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir).count()
-      catch { case _: Throwable => -1L }
+      val ok =
+        try { SparkEntry.queries(name)(spark, sfDir).count(); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: $e")
+          false
+        }
       val dt = (System.nanoTime() - t0) / 1e9
       // release between queries (untimed: block cleanup is harness
       // hygiene, not operator cost — and it is asynchronous anyway)
       graft.operators.Checkpoints.releaseAll()
-      name -> dt
+      name -> Option.when(ok)(dt)
     }.toMap
     val p1 = timedPass()
     val p2 = timedPass()
-    val results = names.map(n => n -> math.min(p1(n), p2(n)))
+    val failed = names.filter(n => p1(n).isEmpty || p2(n).isEmpty)
+    val results = names.filterNot(failed.contains)
+      .map(n => n -> math.min(p1(n).get, p2(n).get))
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).sum
     // the driver's BENCH artifact keeps only a ~2000-char tail of
     // stdout: a 150-query full-precision map (~4 KB) arrives truncated
@@ -66,7 +69,7 @@ object Bench {
       val p = java.nio.file.Paths.get(out)
       if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
       java.nio.file.Files.writeString(p,
-        s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}""")
+        s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir"}""")
     } catch { case e: Throwable => System.err.println(s"[bench] full dump failed: $e") }
     // locale-pinned: default-locale "%.3f" prints "1,234" under
     // comma-decimal locales — invalid JSON, parsed:null at the driver
@@ -82,10 +85,14 @@ object Bench {
     val top = results.sortBy(-_._2).take(40).sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + f3(v) }
       .mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$top,"sf":"$sfDir","n_queries":${results.size},"full":"$out"}"""
+    val line = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$top,"failed":$failedJson,"sf":"$sfDir","n_queries":${results.size},"full":"$out"}"""
     spark.stop()
     // print AFTER spark.stop(): shutdown chatter lands above the line,
     // keeping it the last (and tail-closest) stdout line of the run
     println(line)
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -108,14 +108,8 @@ object ClusterLedger {
     }
   }
 
-  /** Atomic commit: write beside, rename over. */
-  private def writeManifest(path: String, m: Manifest): Unit = {
-    val tmp = new File(path, s"_cluster_manifest.json.tmp${System.nanoTime()}")
-    java.nio.file.Files.write(tmp.toPath, render(m).getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp.toPath, manifestFile(path).toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def writeManifest(path: String, m: Manifest): Unit =
+    graft.sources.CommitSlot.writeAtomically(manifestFile(path), render(m))
 
   /** Assemble the current labeling from the owner map: one
     * partition-pruned scan per distinct owning directory (≤

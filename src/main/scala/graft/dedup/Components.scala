@@ -135,13 +135,21 @@ object Components {
     * lazy plan may execute more than once. Output is bit-equal to
     * [[connectedComponents]] — the union-find registers both endpoints
     * of every edge, so edge orientation/symmetry never changes the
-    * labeling. */
+    * labeling.
+    *
+    * The bound is TRUSTED, not checked: an undercount (a bound below
+    * the real edge count) routes the whole graph through the
+    * single-task union-find, however large it is — correct labels,
+    * but one task's memory and time. A negative bound can only be an
+    * undercount and is refused. */
   private[graft] def connectedComponentsBounded(pairs: DataFrame, a: String, b: String,
       maxEdges: Long, maxIter: Int = 20,
-      localThreshold: Long = LocalEdgeThreshold): DataFrame =
+      localThreshold: Long = LocalEdgeThreshold): DataFrame = {
+    require(maxEdges >= 0, s"maxEdges must be an upper bound on the edge count, got $maxEdges")
     if (maxEdges <= localThreshold)
       localComponents(pairs.select(col(a).as("u"), col(b).as("v")))
     else connectedComponents(pairs, a, b, maxIter, localThreshold)
+  }
 
   /** (id, cluster_id) for every node in `pairs`; cluster_id = min
     * node id of the component. Deterministic. Graphs at or under

@@ -2,6 +2,8 @@ package graft.similarity
 
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.{CommitSlot, LiveTable}
+
 /** Generation pointer for persisted-index quantizer state: the tiny
   * mutable object behind [[IvfIndex]]'s and [[PqIndex]]'s atomic
   * publishes. Trained state (centroids, codebooks, drift baselines)
@@ -14,19 +16,9 @@ import org.apache.spark.sql.SparkSession
   * index's vacuum. */
 private[similarity] object GenPointer {
 
-  /** (database, bare table) of a possibly-qualified table name. */
-  def split(spark: SparkSession, table: String): (String, String) =
-    table.lastIndexOf('.') match {
-      case -1 => (spark.catalog.currentDatabase, table)
-      case i => (table.substring(0, i), table.substring(i + 1))
-    }
-
   def file(spark: SparkSession, table: String, kind: String): java.io.File = {
-    val (db, t) = split(spark, table)
-    val loc = spark.catalog.getDatabase(db).locationUri
-    val dir = if (loc.contains(":")) new java.io.File(new java.net.URI(loc).getPath)
-      else new java.io.File(loc)
-    new java.io.File(dir, s"_${kind}_gen_$t.json")
+    val (db, t) = LiveTable.splitName(spark, table)
+    new java.io.File(LiveTable.databaseDir(spark, db), s"_${kind}_gen_$t.json")
   }
 
   private val GenRe = """"gen"\s*:\s*(\d+)""".r.unanchored
@@ -45,20 +37,14 @@ private[similarity] object GenPointer {
       s"no $kind index generation pointer for $table — build the index first"))
 
   /** Atomic commit: write beside, rename over. */
-  def swap(spark: SparkSession, table: String, kind: String, gen: Int): Unit = {
-    val f = file(spark, table, kind)
-    val tmp = new java.io.File(f.getParentFile, s"${f.getName}.tmp${System.nanoTime()}")
-    java.nio.file.Files.write(tmp.toPath, s"""{"gen": $gen}""".getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp.toPath, f.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  def swap(spark: SparkSession, table: String, kind: String, gen: Int): Unit =
+    CommitSlot.writeAtomically(file(spark, table, kind), s"""{"gen": $gen}""")
 
   /** Drop every `<t>_<suffix>_gNNNNN` table of a generation other than
     * `keepGen`. Returns the dropped fully-qualified names. */
   def vacuum(spark: SparkSession, table: String, suffixes: Seq[String],
       keepGen: Int): Seq[String] = {
-    val (db, t) = split(spark, table)
+    val (db, t) = LiveTable.splitName(spark, table)
     val genRe = (java.util.regex.Pattern.quote(t) +
       "_(?:" + suffixes.mkString("|") + ")_g(\\d{5})").r
     val doomed = spark.catalog.listTables(db).collect().map(_.name).toSeq.flatMap {

@@ -64,7 +64,12 @@ object SemDedup {
     * a hard worst-case bound — the standard blocking tradeoff. Cells
     * at or under the cap are byte-identical to the uncapped sweep.
     * The default [[CellCap.Auto]] measures the average cell size and
-    * caps at 4× it, so a 100 TB run is bounded without tuning. */
+    * caps at 4× it, so a 100 TB run is bounded without tuning.
+    *
+    * Storage: the vectors ride through the clustering checkpoint, so
+    * the FULL vector corpus (`e`, `nrm` per vector) stays pinned in
+    * checkpoint storage until the caller's query boundary
+    * (`Checkpoints.releaseAll`) — budget executor storage for it. */
   def semDedup(corpus: DataFrame, numCentroids: Int, lloydIters: Int, tau: Double,
       maxCellSize: CellCap = CellCap.Auto): DataFrame = {
     // vectors ride THROUGH the assignment's top-1 heap (carry): the
@@ -152,11 +157,17 @@ object SemDedup {
 
   /** The shared clustering front half: IVF centroids, per-vector
     * assignment, and the cell-cap sub-sharding, checkpointed once as
-    * a narrow (vec_id, [carry…,] c_id, __sub) tuple (see [[semDedup]]
-    * notes). `assignInput` optionally substitutes the frame the
-    * ASSIGNMENT runs over (a narrow derivation of `corpus`, e.g. the
-    * PQ-encoded corpus) plus extra columns to carry through the top-1
-    * heap — the centroid BUILD always trains on `corpus` itself. */
+    * (vec_id, carry…, c_id, __sub). `assignInput` optionally
+    * substitutes the frame the ASSIGNMENT runs over (a narrow
+    * derivation of `corpus`, e.g. the PQ-encoded corpus) plus extra
+    * columns to carry through the top-1 heap — the centroid BUILD
+    * always trains on `corpus` itself.
+    *
+    * The checkpoint is only as narrow as `carry`: [[semDedup]] carries
+    * the vectors themselves (`e`, `nrm`), so it pins the FULL vector
+    * corpus in checkpoint storage until the caller's query boundary
+    * (`Checkpoints.releaseAll`); [[semDedupPq]] carries only the PQ
+    * codes (m small ints per vector). */
   private def shardedAssignment(corpus: DataFrame, numCentroids: Int, lloydIters: Int,
       maxCellSize: CellCap,
       assignInput: Option[(DataFrame, Seq[String])] = None,
@@ -192,9 +203,10 @@ object SemDedup {
     }
     // three consumers (both sides of the pair join + the verdict join)
     // and the assignment is itself a centroid-scan per vector —
-    // materialize the narrow (vec_id, c_id, sub) triple once instead
-    // of re-deriving it per consumer; released at the caller's next
-    // Checkpoints.releaseAll() query boundary
+    // materialize (vec_id, carry…, c_id, __sub) once instead of
+    // re-deriving it per consumer (full vectors when carry holds
+    // e/nrm); released at the caller's next Checkpoints.releaseAll()
+    // query boundary
     graft.operators.Checkpoints.eager(sharded0)
   }
 }

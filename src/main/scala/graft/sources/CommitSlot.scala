@@ -97,4 +97,21 @@ object CommitSlot {
       } else None
     } catch { case _: java.io.IOException => None }
   }
+
+  /** Atomic small-file commit — write beside, rename over: `content`
+    * goes to a `.`-prefixed temporary next to `target` (hidden from
+    * Spark's and the streaming source's file listings), then one
+    * atomic rename replaces `target`. Readers see the old content or
+    * the new, never a torn file; a crash before the rename strands
+    * only the hidden temporary. The single commit step behind every
+    * manifest and pointer file ([[Versioned]]'s manifest and change
+    * feed, [[graft.dedup.ClusterLedger]]'s manifest, the index
+    * family's generation pointers). */
+  def writeAtomically(target: File, content: String): Unit = {
+    val tmp = new File(target.getParentFile, s".${target.getName}.tmp${System.nanoTime()}")
+    java.nio.file.Files.write(tmp.toPath, content.getBytes("UTF-8"))
+    java.nio.file.Files.move(tmp.toPath, target.toPath,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  }
 }

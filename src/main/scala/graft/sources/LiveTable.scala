@@ -44,6 +44,30 @@ object LiveTable {
   /** Physical table name of generation `gen`. */
   def gTable(table: String, gen: Int): String = f"${table}__g$gen%05d"
 
+  /** (database, bare table) of a possibly-qualified table name. */
+  def splitName(spark: SparkSession, table: String): (String, String) =
+    table.lastIndexOf('.') match {
+      case -1 => (spark.catalog.currentDatabase, table)
+      case i => (table.substring(0, i), table.substring(i + 1))
+    }
+
+  /** The local directory of database `db`'s catalog location — where
+    * the index family keeps its claim and pointer files. */
+  def databaseDir(spark: SparkSession, db: String): java.io.File = {
+    val loc = spark.catalog.getDatabase(db).locationUri
+    if (loc.contains(":")) new java.io.File(new java.net.URI(loc).getPath)
+    else new java.io.File(loc)
+  }
+
+  /** Every existing generation number of `table`, ascending. */
+  def generations(spark: SparkSession, table: String): Seq[Int] = {
+    val (db, bare) = splitName(spark, table)
+    val genRe = (java.util.regex.Pattern.quote(bare) + "__g(\\d{5})").r
+    spark.catalog.listTables(db).collect().map(_.name).toSeq.collect {
+      case genRe(g) => g.toInt
+    }.sorted
+  }
+
   private def ident(spark: SparkSession, table: String) =
     spark.sessionState.sqlParser.parseTableIdentifier(table)
 
@@ -195,17 +219,10 @@ object LiveTable {
   def vacuumGens(spark: SparkSession, table: String,
       keepPrevious: Boolean = true): Seq[String] = {
     val live = liveGen(spark, table).getOrElse(return Nil)
-    val (db, bare) = table.lastIndexOf('.') match {
-      case -1 => (spark.catalog.currentDatabase, table)
-      case i => (table.substring(0, i), table.substring(i + 1))
-    }
-    val genRe = (java.util.regex.Pattern.quote(bare) + "__g(\\d{5})").r
-    val keep: Int => Boolean =
-      g => g == live || (keepPrevious && g == live - 1)
-    val doomed = spark.catalog.listTables(db).collect().map(_.name).toSeq.flatMap {
-      case n @ genRe(g) if !keep(g.toInt) => Some(s"$db.$n")
-      case _ => None
-    }.sorted
+    val (db, bare) = splitName(spark, table)
+    val doomed = generations(spark, table)
+      .filterNot(g => g == live || (keepPrevious && g == live - 1))
+      .map(g => s"$db.${gTable(bare, g)}")
     doomed.foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
     doomed
   }

@@ -79,13 +79,8 @@ object TableCompact {
     }
 
   private def claimFile(spark: SparkSession, table: String): java.io.File = {
-    val (db, bare) = table.lastIndexOf('.') match {
-      case -1 => (spark.catalog.currentDatabase, table)
-      case i => (table.substring(0, i), table.substring(i + 1))
-    }
-    val loc = spark.catalog.getDatabase(db).locationUri
-    val dir = if (loc.contains(":")) new java.io.File(new java.net.URI(loc).getPath)
-      else new java.io.File(loc)
+    val (db, bare) = LiveTable.splitName(spark, table)
+    val dir = LiveTable.databaseDir(spark, db)
     dir.mkdirs()
     new java.io.File(dir, s"_compact_$bare")
   }
@@ -101,18 +96,6 @@ object TableCompact {
   private def dataFiles(spark: SparkSession, physical: String): Int =
     spark.table(physical).inputFiles.length
 
-  /** Every existing generation number of `table`, ascending. */
-  private def allGens(spark: SparkSession, table: String): Seq[Int] = {
-    val (db, bare) = table.lastIndexOf('.') match {
-      case -1 => (spark.catalog.currentDatabase, table)
-      case i => (table.substring(0, i), table.substring(i + 1))
-    }
-    val genRe = (java.util.regex.Pattern.quote(bare) + "__g(\\d{5})").r
-    spark.catalog.listTables(db).collect().map(_.name).toSeq.collect {
-      case genRe(g) => g.toInt
-    }.sorted
-  }
-
   /** Repair a crashed compaction. Under the view layout the only
     * crash litter is staged generations the view never committed to —
     * dropped here. A legacy UPGRADE that crashed between its DROP
@@ -121,7 +104,7 @@ object TableCompact {
     * fully written before the drop, so completing is always safe).
     * No-op otherwise. Returns what it did. */
   def heal(spark: SparkSession, table: String): String = {
-    val gens = allGens(spark, table)
+    val gens = LiveTable.generations(spark, table)
     if (!spark.catalog.tableExists(table)) {
       if (gens.isEmpty) "noop"
       else { // crashed legacy upgrade: commit the highest staged generation

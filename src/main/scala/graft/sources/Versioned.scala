@@ -228,7 +228,7 @@ object Versioned {
       sys.error(s"simulated crash at publish point '$point'")
     }
 
-  /** Atomic pointer swap: write beside, rename over. Also records the
+  /** Atomic pointer swap ([[CommitSlot.writeAtomically]]). Also records the
     * version's immutable `_v%05d.json` chain entry, stamped with the
     * publish wall-clock ([[readAsOf]]'s axis). The stamp is clamped to
     * stay strictly above every earlier chain entry's: a wall-clock
@@ -249,11 +249,7 @@ object Versioned {
     java.nio.file.Files.write(versionFile(root, m.version).toPath,
       render(m).getBytes("UTF-8"))
     maybeCrash("chain")
-    val tmp = new File(root, s"_manifest.json.tmp${System.nanoTime()}")
-    java.nio.file.Files.write(tmp.toPath, render(m).getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp.toPath, manifestFile(root).toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    CommitSlot.writeAtomically(manifestFile(root), render(m))
     // the streaming log's visible mirror — AFTER the pointer move so
     // the feed only ever names committed versions; self-healing for
     // any gap a predecessor's crash left (see syncFeed)
@@ -284,20 +280,13 @@ object Versioned {
       .flatMap(f => "^v(\\d{5})\\.json$".r.findFirstMatchIn(f.getName).map(_.group(1).toInt))
       .maxOption.getOrElse(0)
     if (highest >= liveV) return
-    for (m <- versions(root) if m.version > highest && m.version <= liveV) {
-      val f = new File(feed, f"v${m.version}%05d.json")
-      // write-beside + atomic rename; REPLACE_EXISTING because a
-      // publisher's post-commit sync can race a consumer's
-      // stream-start sync on the same entry — both render the same
-      // committed manifest, so last-write-wins is byte-identical and
-      // neither side may throw (a publisher throwing AFTER its
-      // pointer swap would report a committed publish as failed)
-      val tmp = new File(feed, f".v${m.version}%05d.json.tmp${System.nanoTime()}")
-      java.nio.file.Files.write(tmp.toPath, render(m).getBytes("UTF-8"))
-      java.nio.file.Files.move(tmp.toPath, f.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
+    // a publisher's post-commit sync can race a consumer's
+    // stream-start sync on the same entry — both render the same
+    // committed manifest, so the replacing rename's last-write-wins is
+    // byte-identical and neither side may throw (a publisher throwing
+    // AFTER its pointer swap would report a committed publish as failed)
+    for (m <- versions(root) if m.version > highest && m.version <= liveV)
+      CommitSlot.writeAtomically(new File(feed, f"v${m.version}%05d.json"), render(m))
   }
 
   /** Streaming change-feed SOURCE — subscribe to this table's
@@ -418,16 +407,15 @@ object Versioned {
     val m = versions(srcRoot).find(_.version == v).getOrElse(return)
     if (!versionReadable(srcRoot, v)) return // vacuumed history: resync at a later version
     val snap = readVersion(spark, srcRoot, v)
+    val spec = m.buckets.getOrElse(sys.error(
+      s"replication needs a bucketed source — $srcRoot v$v has no layout contract"))
     currentManifest(dstRoot) match {
       case None =>
-        val spec = m.buckets.getOrElse(sys.error(
-          s"replication needs a bucketed source — $srcRoot v$v has no layout contract"))
         val r = promoteBucketed(snap, dstRoot, spec.key, spec.numBuckets,
           zoneCols = spec.zones, keyBloomBits = spec.bloomBits)
         require(r.promoted, s"replica bootstrap refused: ${r.reason.getOrElse("")}")
       case Some(_) =>
-        val keys = m.buckets.map(_.keys).getOrElse(sys.error(
-          s"replication needs a bucketed source — $srcRoot v$v has no layout contract"))
+        val keys = spec.keys
         val prev =
           if (versionReadable(srcRoot, v - 1)) readVersion(spark, srcRoot, v - 1)
           else read(spark, dstRoot) // resync: delta vs the replica itself
@@ -453,7 +441,7 @@ object Versioned {
   /** The live version's data. Fails if the table has never been
     * promoted. */
   def read(spark: SparkSession, root: String): DataFrame = {
-    val m = currentManifest(root).getOrElse(sys.error(s"no live version under $root"))
+    val m = liveManifest(root)
     readManifestData(spark, root, m)
   }
 
@@ -514,6 +502,12 @@ object Versioned {
         spark.read.parquet(dir.getPath)
     }
 
+  /** The owning directories of `buckets` (empty buckets skipped), in
+    * directory (= publish) order, each with the buckets it owns. */
+  private def ownersOf(spec: BucketSpec, buckets: Seq[Int]): Seq[(String, Seq[Int])] =
+    buckets.map(b => spec.owner(b) -> b).filter(_._1.nonEmpty).groupBy(_._1)
+      .toSeq.sortBy(_._1).map { case (dir, owned) => dir -> owned.map(_._2) }
+
   /** Assemble a bucketed version from its owner map: one
     * partition-pruned scan per distinct owning directory (≤
     * min(publishes, numBuckets) of them), unioned; any pending
@@ -522,10 +516,10 @@ object Versioned {
     * internal layout column and is dropped from the result. */
   private def assembleBuckets(spark: SparkSession, root: String, version: Int,
       spec: BucketSpec): DataFrame = {
-    val byDir = spec.owner.zipWithIndex.filter(_._1.nonEmpty).groupBy(_._1)
+    val byDir = ownersOf(spec, spec.owner.indices)
     require(byDir.nonEmpty || spec.deltas.nonEmpty,
       s"bucketed version $version has no non-empty buckets")
-    (byDir.keys ++ spec.deltas).foreach { dir =>
+    (byDir.map(_._1) ++ spec.deltas).foreach { dir =>
       require(new File(root, dir).exists(),
         s"version $version reads bucket data from $dir, which was vacuumed")
     }
@@ -537,9 +531,8 @@ object Versioned {
         (decodeSchema(b64) :+ StructField("bkt", IntegerType)).toArray))
       case None => spark.read
     }
-    val parts = byDir.toSeq.sortBy(_._1).map { case (dir, entries) =>
-      reader.parquet(new File(root, dir).getPath)
-        .filter(col("bkt").isin(entries.map(_._2): _*))
+    val parts = byDir.map { case (dir, bs) =>
+      reader.parquet(new File(root, dir).getPath).filter(col("bkt").isin(bs: _*))
     }
     // allowMissingColumns: after an add-column merge, older directories
     // lack the new columns and read as null; dir-name order (= publish
@@ -712,6 +705,100 @@ object Versioned {
     f.delete()
   }
 
+  /** The live manifest, or a loud error when nothing was published. */
+  private def liveManifest(root: String): Manifest =
+    currentManifest(root).getOrElse(sys.error(s"no live version under $root"))
+
+  /** The live manifest of a bucketed table, or a loud error saying
+    * why the caller needs the bucket layout. */
+  private def liveBucketed(root: String, why: String): (Manifest, BucketSpec) = {
+    val live = liveManifest(root)
+    (live, live.buckets.getOrElse(sys.error(s"live version under $root is not bucketed — $why")))
+  }
+
+  /** One publish's version slot and its private staging directory.
+    * The nonce suffix keeps concurrent attempts (single-writer
+    * violations the commit guard catches) from clobbering each other's
+    * staging; crashed attempts leave orphans that [[vacuum]] sweeps. */
+  private final case class Slot(version: Int, dirName: String, staging: File)
+
+  private def nextSlot(root: String, live: Option[Manifest]): Slot = {
+    val version = live.map(_.version + 1).getOrElse(1)
+    val dirName = f"v$version%05d"
+    Slot(version, dirName, new File(root, s"_staging_${dirName}_${System.nanoTime()}"))
+  }
+
+  /** What a publish's audit found: (rule → count) violations, the diff
+    * gate's (status → count) stats, and the refusal reason — None iff
+    * the publish committed. */
+  private final case class Audit(violations: Seq[(String, Long)],
+      diffStats: Seq[(String, Long)], reason: Option[String]) {
+    def committed: Boolean = reason.isEmpty
+  }
+
+  /** The tail every data publish shares once its candidate is staged:
+    * validate WHAT WAS WRITTEN (`audited` is the staged data re-read in
+    * the table's shape, None when nothing was staged), then run the
+    * caller's `gate`. A refusal removes the staging directory and
+    * leaves the pointer where it was; a pass claims the version slot,
+    * renames the staging directory into it ([[claimAndRename]]) and
+    * commits `manifest` (crash points `staged`, `claimed`, `renamed`,
+    * `chain`, in publish order). */
+  private def auditAndCommit(root: String, live: Option[Manifest], slot: Slot,
+      startedMs: Long, checks: Seq[Validate.Check], audited: => Option[DataFrame],
+      gate: => (Seq[(String, Long)], Option[String]))(manifest: => Manifest): Audit = {
+    maybeCrash("staged")
+    val viol: Seq[(String, Long)] =
+      if (checks.isEmpty) Seq.empty
+      else audited.toSeq.flatMap(Validate.violations(_, checks).collect()
+        .map(r => (r.getString(0), r.getLong(1))))
+    val (diffStats, gateReason) = gate
+    val reason = viol.find(_._2 > 0)
+      .map { case (rule, n) => s"validation: rule '$rule' has $n violations" }
+      .orElse(gateReason)
+    if (reason.isDefined) rmTree(slot.staging)
+    else {
+      val claim = claimAndRename(root, live, slot.staging, slot.dirName, startedMs)
+      maybeCrash("renamed")
+      writeManifest(root, manifest)
+      claim.release()
+    }
+    Audit(viol, diffStats, reason)
+  }
+
+  /** The [[DiffGate]] of a full publish: (status → count) stats of the
+    * staged candidate against the live version, refusing when more
+    * than `maxChangedPerMille` of the live keys changed or disappeared.
+    * No gate or no live version: nothing to compare. */
+  private def diffGateVerdict(root: String, live: Option[Manifest], staged: DataFrame,
+      diffGate: Option[DiffGate]): (Seq[(String, Long)], Option[String]) =
+    (live, diffGate) match {
+      case (Some(m), Some(g)) =>
+        val liveDf = readManifestData(staged.sparkSession, root, m)
+        val stats = TableDiff.snapshotDiffStats(TableDiff.snapshotDiff(
+          liveDf, staged, col(g.key), col(g.key), col(g.content), col(g.content)))
+          .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+        val byStatus = stats.toMap.withDefaultValue(0L)
+        val liveRows = byStatus("unchanged") + byStatus("changed") + byStatus("removed")
+        val moved = byStatus("changed") + byStatus("removed")
+        val over = liveRows > 0 && moved * 1000L > g.maxChangedPerMille * liveRows
+        (stats, if (over) Some(
+          s"diff gate: $moved of $liveRows live keys changed/removed " +
+            s"(> ${g.maxChangedPerMille} per mille)") else None)
+      case _ => (Seq.empty, None)
+    }
+
+  /** The O(1) changed-rows gate of the drop publishes ([[merge]],
+    * [[patch]]): refuse when updates + deletes of existing keys exceed
+    * `maxChangedPerMille` of the manifest's live row count. */
+  private def changedRowsVerdict(maxChangedPerMille: Option[Long], movedKeys: Long,
+      liveRows: Long): (Seq[(String, Long)], Option[String]) =
+    (Seq.empty, maxChangedPerMille.flatMap { pm =>
+      if (liveRows > 0 && movedKeys * 1000L > pm * liveRows)
+        Some(s"merge gate: $movedKeys of $liveRows live keys changed/removed (> $pm per mille)")
+      else None
+    })
+
   /** Stage → audit → publish. Returns the report either way; the
     * manifest moves only on `promoted = true`. */
   def promote(
@@ -719,56 +806,18 @@ object Versioned {
       root: String,
       checks: Seq[Validate.Check] = Seq.empty,
       diffGate: Option[DiffGate] = None): PromoteReport = {
-    val spark = df.sparkSession
     new File(root).mkdirs()
     val startedMs = System.currentTimeMillis()
     val live = currentManifest(root)
-    val version = live.map(_.version + 1).getOrElse(1)
-    val dirName = f"v$version%05d"
-    // nonce suffix: concurrent attempts (single-writer violations the
-    // commit guard catches) must never clobber each other's staging;
-    // crashed attempts leave orphans that [[vacuum]] sweeps
-    val staging = new File(root, s"_staging_${dirName}_${System.nanoTime()}")
-    df.write.mode(SaveMode.Overwrite).parquet(staging.getPath)
-    val staged = spark.read.parquet(staging.getPath)
-
-    val viol: Seq[(String, Long)] =
-      if (checks.isEmpty) Seq.empty
-      else Validate.violations(staged, checks).collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSeq
-    val firstViolation = viol.find(_._2 > 0)
-
-    val (diffStats, diffReason): (Seq[(String, Long)], Option[String]) =
-      (live, diffGate) match {
-        case (Some(m), Some(g)) =>
-          val liveDf = readManifestData(spark, root, m)
-          val stats = TableDiff.snapshotDiffStats(TableDiff.snapshotDiff(
-            liveDf, staged, col(g.key), col(g.key), col(g.content), col(g.content)))
-            .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-          val byStatus = stats.toMap.withDefaultValue(0L)
-          val liveRows = byStatus("unchanged") + byStatus("changed") + byStatus("removed")
-          val moved = byStatus("changed") + byStatus("removed")
-          val over = liveRows > 0 && moved * 1000L > g.maxChangedPerMille * liveRows
-          (stats, if (over) Some(
-            s"diff gate: $moved of $liveRows live keys changed/removed " +
-              s"(> ${g.maxChangedPerMille} per mille)") else None)
-        case _ => (Seq.empty, None)
-      }
-
-    val reason = firstViolation
-      .map { case (rule, n) => s"validation: rule '$rule' has $n violations" }
-      .orElse(diffReason)
-
-    reason match {
-      case Some(_) =>
-        rmTree(staging)
-        PromoteReport(promoted = false, version, dirName, viol, diffStats, reason)
-      case None =>
-        val claim = claimAndRename(root, live, staging, dirName, startedMs)
-        writeManifest(root, Manifest(version, dirName, live.map(_.path)))
-        claim.release()
-        PromoteReport(promoted = true, version, dirName, viol, diffStats, None)
+    val slot = nextSlot(root, live)
+    df.write.mode(SaveMode.Overwrite).parquet(slot.staging.getPath)
+    val staged = df.sparkSession.read.parquet(slot.staging.getPath)
+    val audit = auditAndCommit(root, live, slot, startedMs, checks, Some(staged),
+      diffGateVerdict(root, live, staged, diffGate)) {
+      Manifest(slot.version, slot.dirName, live.map(_.path))
     }
+    PromoteReport(audit.committed, slot.version, slot.dirName, audit.violations,
+      audit.diffStats, audit.reason)
   }
 
   /** Commit-slot claim: the concurrency discipline between "audit
@@ -913,9 +962,7 @@ object Versioned {
     new File(root).mkdirs()
     val startedMs = System.currentTimeMillis()
     val live = currentManifest(root)
-    val version = live.map(_.version + 1).getOrElse(1)
-    val dirName = f"v$version%05d"
-    val staging = new File(root, s"_staging_${dirName}_${System.nanoTime()}")
+    val slot = nextSlot(root, live)
     // Cluster the staging write BY BUCKET before partitionBy when the
     // table carries no zone maps: a partitionBy("bkt") write emits one
     // file per (task, bucket) pair, so an unclustered M-task input
@@ -965,57 +1012,121 @@ object Versioned {
     // don't pay a second action for a number the first one knows)
     val rowsObs = org.apache.spark.sql.Observation()
     toStage.observe(rowsObs, count(lit(1)).as("rows"))
-      .write.mode(SaveMode.Overwrite).partitionBy("bkt").parquet(staging.getPath)
+      .write.mode(SaveMode.Overwrite).partitionBy("bkt").parquet(slot.staging.getPath)
     val rows = rowsObs.get("rows").asInstanceOf[Long]
     require(rows > 0, "promoteBucketed refuses an empty table (no bucket files to lay out)")
-    if (zoneCols.nonEmpty) buildZoneMap(spark, staging.getPath, zoneCols)
-    if (keyBloomBits > 0) buildKeyBloom(spark, staging.getPath, keys, keyBloomBits)
-    // lazy: .schema is a driver-side footer read; Validate below runs
-    // a job only when the caller passed checks
-    val staged = spark.read.parquet(staging.getPath)
-
-    val viol: Seq[(String, Long)] =
-      if (checks.isEmpty) Seq.empty
-      else Validate.violations(staged.drop("bkt"), checks).collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSeq
-    val firstViolation = viol.find(_._2 > 0)
-
-    val (diffStats, diffReason): (Seq[(String, Long)], Option[String]) =
-      (live, diffGate) match {
-        case (Some(m), Some(g)) =>
-          val liveDf = readManifestData(spark, root, m)
-          val stats = TableDiff.snapshotDiffStats(TableDiff.snapshotDiff(
-            liveDf, staged, col(g.key), col(g.key), col(g.content), col(g.content)))
-            .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-          val byStatus = stats.toMap.withDefaultValue(0L)
-          val liveRows = byStatus("unchanged") + byStatus("changed") + byStatus("removed")
-          val moved = byStatus("changed") + byStatus("removed")
-          val over = liveRows > 0 && moved * 1000L > g.maxChangedPerMille * liveRows
-          (stats, if (over) Some(
-            s"diff gate: $moved of $liveRows live keys changed/removed " +
-              s"(> ${g.maxChangedPerMille} per mille)") else None)
-        case _ => (Seq.empty, None)
-      }
-
-    val reason = firstViolation
-      .map { case (rule, n) => s"validation: rule '$rule' has $n violations" }
-      .orElse(diffReason)
-
-    reason match {
-      case Some(_) =>
-        rmTree(staging)
-        PromoteReport(promoted = false, version, dirName, viol, diffStats, reason)
-      case None =>
-        val claim = claimAndRename(root, live, staging, dirName, startedMs)
-        // the widened data schema rides in the manifest so serving
-        // reads never pay per-directory footer derivation
-        val schemaB64 = encodeSchema(staged.schema.fields.filter(_.name != "bkt").toSeq)
-        writeManifest(root, Manifest(version, dirName, live.map(_.path),
-          Some(BucketSpec(keys.mkString(","), numBuckets, rows,
-            Vector.fill(numBuckets)(dirName), zoneCols, Some(schemaB64), keyBloomBits))))
-        claim.release()
-        PromoteReport(promoted = true, version, dirName, viol, diffStats, None)
+    if (zoneCols.nonEmpty) buildZoneMap(spark, slot.staging.getPath, zoneCols)
+    if (keyBloomBits > 0) buildKeyBloom(spark, slot.staging.getPath, keys, keyBloomBits)
+    // lazy: .schema is a driver-side footer read; the audit runs a job
+    // only when the caller passed checks
+    val staged = spark.read.parquet(slot.staging.getPath)
+    val audit = auditAndCommit(root, live, slot, startedMs, checks, Some(staged.drop("bkt")),
+      diffGateVerdict(root, live, staged, diffGate)) {
+      // the widened data schema rides in the manifest so serving
+      // reads never pay per-directory footer derivation
+      val schemaB64 = encodeSchema(staged.schema.fields.filter(_.name != "bkt").toSeq)
+      Manifest(slot.version, slot.dirName, live.map(_.path),
+        Some(BucketSpec(keys.mkString(","), numBuckets, rows,
+          Vector.fill(numBuckets)(slot.dirName), zoneCols, Some(schemaB64), keyBloomBits)))
     }
+    PromoteReport(audit.committed, slot.version, slot.dirName, audit.violations,
+      audit.diffStats, audit.reason)
+  }
+
+  /** What [[merge]] and [[patch]] both know about a drop before either
+    * stages anything. `d` is the drop checkpointed with its `__del`
+    * marker and `bkt` routing; `dropBuckets` are the buckets its keys
+    * hash to; `allFields` is the live widened schema plus the columns
+    * the drop adds, and `missing` the live columns the drop lacks. */
+  private final case class DropIntake(live: Manifest, spec: BucketSpec, d: DataFrame,
+      nDrop: Long, upsertRows: Long, dropBuckets: Seq[Int],
+      allFields: Seq[StructField], missing: Seq[String])
+
+  /** The drop intake [[merge]] and [[patch]] share (`verb` names the
+    * caller in refusals): resolve the live bucketed layout, checkpoint
+    * the routed drop, answer its size, key-uniqueness, upsert count and
+    * touched buckets in ONE aggregation job, derive the evolved schema,
+    * and refuse before any staging I/O. `body` gets the intake and an
+    * `eager` checkpoint that registers for release: every checkpoint
+    * taken here or in `body` releases in the finally — a publish that
+    * loses the commit race (throws) must not leak cached blocks in a
+    * long-lived retrying driver. */
+  private def withDropIntake[T](drop: DataFrame, root: String, deleted: Column, verb: String)(
+      body: (DropIntake, DataFrame => DataFrame) => T): T = {
+    val spark = drop.sparkSession
+    val (live, spec) = liveBucketed(root, s"publish with promoteBucketed before $verb")
+    val keys = spec.keys
+    keys.foreach(k => require(drop.columns.contains(k),
+      s"merge key column '$k' not in ${drop.columns.mkString(", ")}"))
+
+    val toRelease = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def eager(df: DataFrame): DataFrame = {
+      val e = graft.operators.Checkpoints.eager(df)
+      toRelease += e
+      e
+    }
+    try {
+      val d = eager(drop
+        .withColumn("__del", coalesce(deleted.cast("boolean"), lit(false)))
+        .withColumn("bkt", bktCol(keys, spec.numBuckets)))
+      // ONE aggregation job answers all the drop questions (size,
+      // key-uniqueness, upsert count, touched buckets) that separate
+      // actions over the same checkpoint would each re-scan (guide
+      // §1.2; the bucket id is a pure function of the key, so
+      // first(bkt) per key group is exact)
+      val keyAgg = d.groupBy(keys.map(col): _*)
+        .agg(count(lit(1)).as("__n"),
+          sum(when(col("__del"), 0L).otherwise(1L)).as("__u"),
+          first(col("bkt")).as("__b"))
+        .agg(sum(col("__n")), count(lit(1)), sum(col("__u")),
+          collect_set(col("__b")))
+        .collect().head
+      val nDrop = if (keyAgg.isNullAt(0)) 0L else keyAgg.getLong(0)
+      val upsertRows = if (keyAgg.isNullAt(2)) 0L else keyAgg.getLong(2)
+      require(nDrop == keyAgg.getLong(1),
+        s"drop has duplicate '${spec.key}' keys — upsert/delete order within a drop is undefined")
+
+      // the table's live schema: recorded in the manifest by every
+      // publish since the field existed (zero per-call footer reads);
+      // older manifests re-derive the first-seen union of the owning
+      // directories' footers
+      val tableFields = widenedFields(spark, root, spec)
+      // SCHEMA EVOLUTION: columns the drop ADDS widen the table — new
+      // files carry them, older rows read as null (unionEvolved's
+      // by-name discipline applied to the bucket store); columns the
+      // drop is MISSING are refused below (delete-only drops excepted)
+      // — an upsert that silently nulled an existing column would be a
+      // data-loss footgun, not evolution. Columns the `deleted`
+      // expression references are CDC MARKERS, not data — they never
+      // widen the table (resolved against the drop so arbitrary marker
+      // expressions work, not just a bare column)
+      val delRefs: Set[String] =
+        drop.select(deleted.as("__p")).queryExecution.analyzed
+          .expressions.flatMap(_.references.map(_.name)).toSet
+      val dropExtras = d.schema.fields.filter(f =>
+        !tableFields.exists(_.name == f.name) && f.name != "__del" && f.name != "bkt" &&
+          !delRefs.contains(f.name)).toSeq
+      val allFields = tableFields ++ dropExtras
+      // legacy-layout guard, BEFORE any staging I/O: a table published
+      // when doubles/decimals were long-cast into zone bounds would
+      // otherwise fail inside buildZoneMap AFTER the staging write,
+      // stranding an orphan — refuse at entry with the remedy instead
+      for (z <- spec.zones; f <- allFields.find(_.name == z))
+        try zoneBound(f.dataType)
+        catch { case e: RuntimeException => sys.error(
+          s"zone column '$z' of the live layout has unsupported type " +
+            s"${f.dataType.simpleString} (a pre-r14 publish accepted it; bounds would " +
+            s"truncate) — republish with promoteBucketed and integral/string/date zone " +
+            s"columns before $verb: ${e.getMessage}") }
+      val missing = tableFields.map(_.name).filterNot(c => drop.columns.contains(c))
+      // upsertRows counts the drop's non-deleted rows (keyAgg above)
+      require(missing.isEmpty || upsertRows == 0,
+        s"drop upsert rows are missing table columns: ${missing.mkString(", ")} — " +
+          "a drop may ADD columns (older rows read as null) but must carry every existing one")
+
+      body(DropIntake(live, spec, d, nDrop, upsertRows, keyAgg.getSeq[Int](3).sorted,
+        allFields, missing), eager)
+    } finally toRelease.foreach(graft.operators.Checkpoints.release)
   }
 
   /** Key-level MERGE publish — apply a drop as upsert/delete WITHOUT
@@ -1074,76 +1185,9 @@ object Versioned {
       zoneCluster: Boolean = false): MergeReport = {
     val spark = drop.sparkSession
     val startedMs = System.currentTimeMillis()
-    val live = currentManifest(root).getOrElse(sys.error(s"no live version under $root"))
-    val spec = live.buckets.getOrElse(sys.error(
-      s"live version under $root is not bucketed — publish with promoteBucketed before merging"))
+    withDropIntake(drop, root, deleted, "merging") { (intake, eager) =>
+    import intake._
     val keys = spec.keys
-    keys.foreach(k => require(drop.columns.contains(k),
-      s"merge key column '$k' not in ${drop.columns.mkString(", ")}"))
-
-    // every eager checkpoint registers here and releases in the
-    // finally — a publish that loses the commit race (throws) must not
-    // leak cached blocks in a long-lived retrying driver
-    val toRelease = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def eager(df: DataFrame): DataFrame = {
-      val e = graft.operators.Checkpoints.eager(df)
-      toRelease += e
-      e
-    }
-    try {
-    val d = eager(drop
-      .withColumn("__del", coalesce(deleted.cast("boolean"), lit(false)))
-      .withColumn("bkt", bktCol(keys, spec.numBuckets)))
-    // ONE aggregation job answers all the drop questions (size,
-    // key-uniqueness, upsert count, touched buckets) the previous
-    // code asked with separate actions over the same checkpoint
-    // (guide §1.2: don't recompute what one pass already knows; the
-    // bucket id is a pure function of the key, so first(bkt) per key
-    // group is exact)
-    val keyAgg = d.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("__n"),
-        sum(when(col("__del"), 0L).otherwise(1L)).as("__u"),
-        first(col("bkt")).as("__b"))
-      .agg(sum(col("__n")), count(lit(1)), sum(col("__u")),
-        collect_set(col("__b")))
-      .collect().head
-    val nDrop = if (keyAgg.isNullAt(0)) 0L else keyAgg.getLong(0)
-    val nDropKeys = keyAgg.getLong(1)
-    val upsertRows = if (keyAgg.isNullAt(2)) 0L else keyAgg.getLong(2)
-    require(nDrop == nDropKeys,
-      s"drop has duplicate '${spec.key}' keys — upsert/delete order within a drop is undefined")
-
-    // the table's live schema: recorded in the manifest by every
-    // publish since the field existed (zero per-call footer reads);
-    // older manifests re-derive the first-seen union of the owning
-    // directories' footers
-    val tableFields = widenedFields(spark, root, spec)
-    // SCHEMA EVOLUTION: columns the drop ADDS widen the table — new
-    // files carry them, older rows read as null (unionEvolved's
-    // by-name discipline applied to the bucket store); columns the
-    // drop is MISSING are still refused (delete-only drops excepted) —
-    // an upsert that silently nulled an existing column would be a
-    // data-loss footgun, not evolution. Columns the `deleted`
-    // expression references are CDC MARKERS, not data — they never
-    // widen the table (resolved against the drop so arbitrary marker
-    // expressions work, not just a bare column)
-    val delRefs: Set[String] =
-      drop.select(deleted.as("__p")).queryExecution.analyzed
-        .expressions.flatMap(_.references.map(_.name)).toSet
-    val dropExtras = d.schema.fields.filter(f =>
-      !tableFields.exists(_.name == f.name) && f.name != "__del" && f.name != "bkt" &&
-        !delRefs.contains(f.name)).toSeq
-    val allFields = tableFields ++ dropExtras
-    // legacy-layout guard, BEFORE any staging I/O: a table published
-    // when doubles/decimals were long-cast into zone bounds would
-    // otherwise fail inside buildZoneMap AFTER the staging write,
-    // stranding an orphan — refuse at entry with the remedy instead
-    for (z <- spec.zones; f <- allFields.find(_.name == z))
-      try zoneBound(f.dataType)
-      catch { case e: RuntimeException => sys.error(
-        s"zone column '$z' of the live layout has unsupported type ${f.dataType.simpleString} " +
-          s"(a pre-r14 publish accepted it; bounds would truncate) — republish with " +
-          s"promoteBucketed and integral/string/date zone columns before merging: ${e.getMessage}") }
     val dataCols: Seq[String] = allFields.map(_.name)
 
     // fold pending PATCH layers into this rewrite: the layers' net
@@ -1165,10 +1209,10 @@ object Versioned {
         allowMissingColumns = true))
     }
     // no pending deltas (the common case): the drop's own bucket set
-    // from the keyAgg pass; with deltas folded in, dAll adds net-delta
-    // keys, so their buckets still need the distinct scan
+    // from the intake's aggregation; with deltas folded in, dAll adds
+    // net-delta keys, so their buckets still need the distinct scan
     val touched =
-      if (spec.deltas.isEmpty) keyAgg.getSeq[Int](3).sorted
+      if (spec.deltas.isEmpty) dropBuckets
       else dAll.select("bkt").distinct().collect().map(_.getInt(0)).toSeq.sorted
 
     // reading every owning directory with the WIDENED schema makes the
@@ -1178,10 +1222,9 @@ object Versioned {
 
     // current rows of the touched buckets only, partition-pruned from
     // their owning directories; keep bkt — it is the staging partition
-    val byDir = touched.map(b => (spec.owner(b), b)).filter(_._1.nonEmpty).groupBy(_._1)
-    val oldRows = byDir.toSeq.sortBy(_._1).map { case (dir, entries) =>
+    val oldRows = ownersOf(spec, touched).map { case (dir, bs) =>
       spark.read.schema(readSchema).parquet(new File(root, dir).getPath)
-        .filter(col("bkt").isin(entries.map(_._2): _*))
+        .filter(col("bkt").isin(bs: _*))
     }.reduceOption(_ unionByName _)
 
     val dKeys = dAll.select((keys :+ "__del").map(col): _*)
@@ -1195,11 +1238,6 @@ object Versioned {
     def dkHint(df: DataFrame): DataFrame =
       if (nAll <= maxBroadcastDropKeys) broadcast(df) else df
     val upsertSrc = dAll.filter(!col("__del"))
-    val missing = tableFields.map(_.name).filterNot(c => drop.columns.contains(c))
-    if (missing.nonEmpty)
-      require(d.filter(!col("__del")).isEmpty,
-        s"drop upsert rows are missing table columns: ${missing.mkString(", ")} — " +
-          "a drop may ADD columns (older rows read as null) but must carry every existing one")
     val upserts =
       if (missing.isEmpty || net.isDefined)
         // net layers read in the widened shape, so dAll carries every
@@ -1207,10 +1245,7 @@ object Versioned {
         upsertSrc.select(dataCols.map(col) :+ col("bkt"): _*)
       else
         // delete-only drop, no layers: an empty frame in the table's shape
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(
-            allFields :+ org.apache.spark.sql.types.StructField(
-              "bkt", org.apache.spark.sql.types.IntegerType)))
+        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], readSchema)
     // No-layer fast path: ONE outer join annotates each touched-bucket
     // row with its drop verdict (__hit null = survivor, false =
     // updated, true = deleted), checkpointed once — survivors AND the
@@ -1274,9 +1309,7 @@ object Versioned {
     val inserted = upsertRows - upserted
     val newTotal = spec.rows + inserted - deletedN
 
-    val version = live.version + 1
-    val dirName = f"v$version%05d"
-    val staging = new File(root, s"_staging_${dirName}_${System.nanoTime()}")
+    val slot = nextSlot(root, Some(live))
     val stagedEmpty = merged.isEmpty
     if (!stagedEmpty) {
       // zoneCluster: range-cluster survivors ∪ upserts on (bkt,
@@ -1306,64 +1339,40 @@ object Versioned {
           // oversized bucket, coalesces tiny ones) instead of the
           // layout constant (guide §2.6).
           merged.hint("rebalance", col("bkt"))
-      toWrite.write.mode(SaveMode.Overwrite).partitionBy("bkt").parquet(staging.getPath)
+      toWrite.write.mode(SaveMode.Overwrite).partitionBy("bkt").parquet(slot.staging.getPath)
       // the layout contract's zone maps ride along on every publish:
       // one extra column-pruned pass over the touched-bucket-sized
       // staging (never the table) — [[readRange]] consults them
-      if (spec.zones.nonEmpty) buildZoneMap(spark, staging.getPath, spec.zones)
+      if (spec.zones.nonEmpty) buildZoneMap(spark, slot.staging.getPath, spec.zones)
       // …and so do the per-file key blooms when the layout carries
       // them — [[lookup]]'s point-probe file skipping
-      if (spec.bloomBits > 0) buildKeyBloom(spark, staging.getPath, keys, spec.bloomBits)
-    } else staging.mkdirs() // every touched bucket emptied: version dir holds no files
-    maybeCrash("staged")
+      if (spec.bloomBits > 0) buildKeyBloom(spark, slot.staging.getPath, keys, spec.bloomBits)
+    } else slot.staging.mkdirs() // every touched bucket emptied: version dir holds no files
 
-    val viol: Seq[(String, Long)] =
-      if (checks.isEmpty || stagedEmpty) Seq.empty
-      else Validate.violations(spark.read.parquet(staging.getPath).drop("bkt"), checks)
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val firstViolation = viol.find(_._2 > 0)
-    val gateReason = maxChangedPerMille.flatMap { pm =>
-      val movedKeys = upserted + deletedN
-      if (spec.rows > 0 && movedKeys * 1000L > pm * spec.rows)
-        Some(s"merge gate: $movedKeys of ${spec.rows} live keys changed/removed (> $pm per mille)")
-      else None
+    val audit = auditAndCommit(root, Some(live), slot, startedMs, checks,
+      if (stagedEmpty) None else Some(spark.read.parquet(slot.staging.getPath).drop("bkt")),
+      changedRowsVerdict(maxChangedPerMille, upserted + deletedN, spec.rows)) {
+      // the committed bucket set is a driver-side listing of the
+      // renamed directory: partitionBy materializes exactly one bkt=K
+      // directory per non-empty bucket, so a touched bucket that
+      // staged zero rows becomes empty ("") instead of pointing at the
+      // new dir — no distinct-scan job re-reading what was just written
+      val stagedBkts: Set[Int] =
+        Option(new File(root, slot.dirName).listFiles()).toSeq.flatten
+          .filter(f => f.isDirectory && f.getName.startsWith("bkt="))
+          .map(_.getName.stripPrefix("bkt=").toInt).toSet
+      val owner = touched.foldLeft(spec.owner)((o, b) =>
+        o.updated(b, if (stagedBkts.contains(b)) slot.dirName else ""))
+      // deltas = Nil: this rewrite FOLDED any pending patch layers
+      // (their rows are in the touched buckets' new files now)
+      Manifest(slot.version, slot.dirName, Some(live.path),
+        Some(spec.copy(rows = newTotal, owner = owner,
+          schemaB64 = Some(encodeSchema(allFields)),
+          deltas = Nil, deltaRows = Nil)))
     }
-    val reason = firstViolation
-      .map { case (rule, n) => s"validation: rule '$rule' has $n violations" }
-      .orElse(gateReason)
-
-    reason match {
-      case Some(_) =>
-        rmTree(staging)
-        MergeReport(merged = false, version, dirName, upserted, inserted, deletedN,
-          touched, viol, reason)
-      case None =>
-        // the staged bucket set is read from STAGING (pre-rename): a
-        // staged bucket with zero rows writes no partition dir — its
-        // owner entry becomes "" (empty bucket), not the new dir.
-        // partitionBy materializes exactly one bkt=K directory per
-        // non-empty bucket, so the set is a driver-side listing — the
-        // previous distinct-scan job re-read everything just written
-        val stagedBkts: Set[Int] =
-          if (stagedEmpty) Set.empty
-          else Option(staging.listFiles()).toSeq.flatten
-            .filter(f => f.isDirectory && f.getName.startsWith("bkt="))
-            .map(_.getName.stripPrefix("bkt=").toInt).toSet
-        val claim = claimAndRename(root, Some(live), staging, dirName, startedMs)
-        maybeCrash("renamed")
-        val owner = touched.foldLeft(spec.owner)((o, b) =>
-          o.updated(b, if (stagedBkts.contains(b)) dirName else ""))
-        // deltas = Nil: this rewrite FOLDED any pending patch layers
-        // (their rows are in the touched buckets' new files now)
-        writeManifest(root, Manifest(version, dirName, Some(live.path),
-          Some(spec.copy(rows = newTotal, owner = owner,
-            schemaB64 = Some(encodeSchema(allFields)),
-            deltas = Nil, deltaRows = Nil))))
-        claim.release()
-        MergeReport(merged = true, version, dirName, upserted, inserted, deletedN,
-          touched, viol, None)
+    MergeReport(audit.committed, slot.version, slot.dirName, upserted, inserted, deletedN,
+      touched, audit.violations, audit.reason)
     }
-    } finally toRelease.foreach(graft.operators.Checkpoints.release)
   }
 
   /** MERGE-ON-READ publish — the O(drop) sibling of [[merge]]. A
@@ -1402,70 +1411,15 @@ object Versioned {
       maxBroadcastDropKeys: Long = 5000000L): PatchReport = {
     val spark = drop.sparkSession
     val startedMs = System.currentTimeMillis()
-    val live = currentManifest(root).getOrElse(sys.error(s"no live version under $root"))
-    val spec = live.buckets.getOrElse(sys.error(
-      s"live version under $root is not bucketed — publish with promoteBucketed before patching"))
+    withDropIntake(drop, root, deleted, "patching") { (intake, _) =>
+    import intake._
     val keys = spec.keys
-    keys.foreach(k => require(drop.columns.contains(k),
-      s"merge key column '$k' not in ${drop.columns.mkString(", ")}"))
     require(spec.deltas.size < maxDeltaLayers,
       s"table under $root already carries ${spec.deltas.size} delta layers " +
         s"(maxDeltaLayers = $maxDeltaLayers) — every read reconciles each layer; " +
         "fold them first (foldDeltas / merge / maintain)")
-
-    val toRelease = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def eager(df: DataFrame): DataFrame = {
-      val e = graft.operators.Checkpoints.eager(df)
-      toRelease += e
-      e
-    }
-    try {
-    val d = eager(drop
-      .withColumn("__del", coalesce(deleted.cast("boolean"), lit(false)))
-      .withColumn("bkt", bktCol(keys, spec.numBuckets)))
-    // ONE aggregation job answers size, key-uniqueness, the upsert
-    // count AND the touched-bucket set together (the merge fast-path
-    // discipline; the bucket id is a pure function of the key, so
-    // first(bkt) per key group is exact and the previous separate
-    // distinct-scan job for `touched` folds in, guide §1.2)
-    val keyAgg = d.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("__n"),
-        sum(when(col("__del"), 0L).otherwise(1L)).as("__u"),
-        first(col("bkt")).as("__b"))
-      .agg(sum(col("__n")), count(lit(1)), sum(col("__u")),
-        collect_set(col("__b")))
-      .collect().head
-    val nDrop = if (keyAgg.isNullAt(0)) 0L else keyAgg.getLong(0)
-    val upsertRows = if (keyAgg.isNullAt(2)) 0L else keyAgg.getLong(2)
     require(nDrop > 0, "patch refuses an empty drop — nothing to publish")
-    require(nDrop == keyAgg.getLong(1),
-      s"drop has duplicate '${spec.key}' keys — upsert/delete order within a drop is undefined")
-
-    val touched = keyAgg.getSeq[Int](3).sorted
-
-    val tableFields = widenedFields(spark, root, spec)
-    // the same evolution/marker discipline as merge: added columns
-    // widen the table, CDC marker columns never do, missing columns
-    // refuse (delete-only drops excepted)
-    val delRefs: Set[String] =
-      drop.select(deleted.as("__p")).queryExecution.analyzed
-        .expressions.flatMap(_.references.map(_.name)).toSet
-    val dropExtras = d.schema.fields.filter(f =>
-      !tableFields.exists(_.name == f.name) && f.name != "__del" && f.name != "bkt" &&
-        !delRefs.contains(f.name)).toSeq
-    val allFields = tableFields ++ dropExtras
-    for (z <- spec.zones; f <- allFields.find(_.name == z))
-      try zoneBound(f.dataType)
-      catch { case e: RuntimeException => sys.error(
-        s"zone column '$z' of the live layout has unsupported type ${f.dataType.simpleString} " +
-          s"— republish with promoteBucketed and integral/string/date zone columns " +
-          s"before patching: ${e.getMessage}") }
-    val dataCols: Seq[String] = allFields.map(_.name)
-    val missing = tableFields.map(_.name).filterNot(c => drop.columns.contains(c))
-    if (missing.nonEmpty)
-      require(d.filter(!col("__del")).isEmpty,
-        s"drop upsert rows are missing table columns: ${missing.mkString(", ")} — " +
-          "a drop may ADD columns (older rows read as null) but must carry every existing one")
+    val touched = dropBuckets
 
     // exact accounting against the RECONCILED pre-image of the touched
     // buckets (base anti-joined by every pending layer's keys, each
@@ -1473,12 +1427,11 @@ object Versioned {
     // delta scans pruned to the touched buckets)
     def dkHint(df: DataFrame): DataFrame =
       if (nDrop <= maxBroadcastDropKeys) broadcast(df) else df
-    val byDir = touched.map(b => (spec.owner(b), b)).filter(_._1.nonEmpty).groupBy(_._1)
     val keySchema = StructType(
       (allFields.filter(f => keys.contains(f.name)) :+ StructField("bkt", IntegerType)).toArray)
-    val baseKeys = byDir.toSeq.sortBy(_._1).map { case (dir, entries) =>
+    val baseKeys = ownersOf(spec, touched).map { case (dir, bs) =>
       spark.read.schema(keySchema).parquet(new File(root, dir).getPath)
-        .filter(col("bkt").isin(entries.map(_._2): _*))
+        .filter(col("bkt").isin(bs: _*))
         .select(keys.map(col): _*)
     }.reduceOption(_ unionByName _)
     val layerSchema = deltaReadSchema(allFields)
@@ -1493,19 +1446,16 @@ object Versioned {
         Some(acc.map(_.join(hinted, keys, "left_anti").unionByName(lup)).getOrElse(lup))
       }
     val dKeys = d.select((keys :+ "__del").map(col): _*)
-    val hits = preKeys.map(_.join(dkHint(dKeys), keys, "inner")
+    val (upserted, deletedN) = preKeys.map(_.join(dkHint(dKeys), keys, "inner")
       .agg(
         sum(when(col("__del"), 0L).otherwise(1L)).as("up"),
         sum(when(col("__del"), 1L).otherwise(0L)).as("del"))
       .collect().head).map(r => (Option(r.get(0)).fold(0L)(_ => r.getLong(0)),
         Option(r.get(1)).fold(0L)(_ => r.getLong(1)))).getOrElse((0L, 0L))
-    val (upserted, deletedN) = hits
     val inserted = upsertRows - upserted
     val newTotal = spec.rows + inserted - deletedN
 
-    val version = live.version + 1
-    val dirName = f"v$version%05d"
-    val staging = new File(root, s"_staging_${dirName}_${System.nanoTime()}")
+    val slot = nextSlot(root, Some(live))
     // the layer IS the drop: data columns (null-filled for delete-only
     // drops), the __del marker, the bucket routing — O(drop) I/O, no
     // survivor read, no bucket rewrite. Clustered by bucket before the
@@ -1522,45 +1472,22 @@ object Versioned {
     val layerStaged =
       if (spec.zones.nonEmpty) layerOut else layerOut.hint("rebalance", col("bkt"))
     layerStaged
-      .write.mode(SaveMode.Overwrite).partitionBy("bkt").parquet(staging.getPath)
-    if (spec.zones.nonEmpty) buildZoneMap(spark, staging.getPath, spec.zones)
-    if (spec.bloomBits > 0) buildKeyBloom(spark, staging.getPath, keys, spec.bloomBits)
-    maybeCrash("staged")
+      .write.mode(SaveMode.Overwrite).partitionBy("bkt").parquet(slot.staging.getPath)
+    if (spec.zones.nonEmpty) buildZoneMap(spark, slot.staging.getPath, spec.zones)
+    if (spec.bloomBits > 0) buildKeyBloom(spark, slot.staging.getPath, keys, spec.bloomBits)
 
-    val viol: Seq[(String, Long)] =
-      if (checks.isEmpty) Seq.empty
-      else Validate.violations(
-        spark.read.parquet(staging.getPath).filter(!col("__del")).drop("bkt", "__del"),
-        checks).collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val firstViolation = viol.find(_._2 > 0)
-    val gateReason = maxChangedPerMille.flatMap { pm =>
-      val movedKeys = upserted + deletedN
-      if (spec.rows > 0 && movedKeys * 1000L > pm * spec.rows)
-        Some(s"merge gate: $movedKeys of ${spec.rows} live keys changed/removed (> $pm per mille)")
-      else None
+    val audit = auditAndCommit(root, Some(live), slot, startedMs, checks,
+      Some(spark.read.parquet(slot.staging.getPath).filter(!col("__del")).drop("bkt", "__del")),
+      changedRowsVerdict(maxChangedPerMille, upserted + deletedN, spec.rows)) {
+      Manifest(slot.version, slot.dirName, Some(live.path),
+        Some(spec.copy(rows = newTotal,
+          schemaB64 = Some(encodeSchema(allFields)),
+          deltas = spec.deltas :+ slot.dirName,
+          deltaRows = spec.deltaRows :+ nDrop)))
     }
-    val reason = firstViolation
-      .map { case (rule, n) => s"validation: rule '$rule' has $n violations" }
-      .orElse(gateReason)
-
-    reason match {
-      case Some(_) =>
-        rmTree(staging)
-        PatchReport(patched = false, version, dirName, upserted, inserted, deletedN,
-          spec.deltas.size, viol, reason)
-      case None =>
-        val claim = claimAndRename(root, Some(live), staging, dirName, startedMs)
-        maybeCrash("renamed")
-        writeManifest(root, Manifest(version, dirName, Some(live.path),
-          Some(spec.copy(rows = newTotal,
-            schemaB64 = Some(encodeSchema(allFields)),
-            deltas = spec.deltas :+ dirName,
-            deltaRows = spec.deltaRows :+ nDrop))))
-        claim.release()
-        PatchReport(patched = true, version, dirName, upserted, inserted, deletedN,
-          spec.deltas.size + 1, viol, None)
+    PatchReport(audit.committed, slot.version, slot.dirName, upserted, inserted, deletedN,
+      spec.deltas.size + (if (audit.committed) 1 else 0), audit.violations, audit.reason)
     }
-    } finally toRelease.foreach(graft.operators.Checkpoints.release)
   }
 
   /** [[patch]] with bounded replay on a lost single-writer race —
@@ -1577,22 +1504,9 @@ object Versioned {
       attempts: Int = 5,
       backoffMs: Long = 500L,
       maxDeltaLayers: Int = 8,
-      refuseKeyConflicts: Boolean = false): PatchReport = {
-    require(attempts >= 1)
-    val firstBase = currentManifest(root).map(_.version)
-    var last: ConcurrentWriteException = null
-    for (attempt <- 1 to attempts) {
-      if (refuseKeyConflicts && attempt > 1)
-        firstBase.foreach(checkKeyConflict(drop, root, _))
-      try return patch(drop, root, deleted, checks, maxChangedPerMille, maxDeltaLayers)
-      catch {
-        case e: ConcurrentWriteException =>
-          last = e
-          if (attempt < attempts) Thread.sleep(backoffMs * attempt)
-      }
-    }
-    throw last
-  }
+      refuseKeyConflicts: Boolean = false): PatchReport =
+    withReplay(drop, root, attempts, backoffMs, refuseKeyConflicts)(
+      patch(drop, root, deleted, checks, maxChangedPerMille, maxDeltaLayers))
 
   /** Fold every pending [[patch]] layer back into the base: ONE
     * merge-shaped rewrite of the layers' touched buckets (the net
@@ -1605,9 +1519,7 @@ object Versioned {
     * pending. */
   def foldDeltas(spark: SparkSession, root: String,
       checks: Seq[Validate.Check] = Seq.empty): MergeReport = {
-    val live = currentManifest(root).getOrElse(sys.error(s"no live version under $root"))
-    val spec = live.buckets.getOrElse(sys.error(
-      s"live version under $root is not bucketed — only bucketed tables carry delta layers"))
+    val (live, spec) = liveBucketed(root, "only bucketed tables carry delta layers")
     if (spec.deltas.isEmpty)
       MergeReport(merged = false, live.version, live.path, 0L, 0L, 0L, Nil, Nil,
         Some("no delta layers to fold"))
@@ -1643,7 +1555,18 @@ object Versioned {
       backoffMs: Long = 500L,
       maxBroadcastDropKeys: Long = 5000000L,
       refuseKeyConflicts: Boolean = false,
-      zoneCluster: Boolean = false): MergeReport = {
+      zoneCluster: Boolean = false): MergeReport =
+    withReplay(drop, root, attempts, backoffMs, refuseKeyConflicts)(
+      merge(drop, root, deleted, checks, maxChangedPerMille, maxBroadcastDropKeys, zoneCluster))
+
+  /** The bounded replay loop behind [[mergeRetry]] and [[patchRetry]]:
+    * run `publish`, and on a lost race ([[ConcurrentWriteException]])
+    * back off linearly and run it again against the new live version,
+    * up to `attempts` times; any other outcome returns or throws as is.
+    * With `refuseKeyConflicts`, every replay first runs
+    * [[checkKeyConflict]]. */
+  private def withReplay[T](drop: DataFrame, root: String, attempts: Int, backoffMs: Long,
+      refuseKeyConflicts: Boolean)(publish: => T): T = {
     require(attempts >= 1)
     // the drop is presumed derived against the CURRENT live version;
     // every replay re-checks against this base, not the previous
@@ -1655,8 +1578,7 @@ object Versioned {
     for (attempt <- 1 to attempts) {
       if (refuseKeyConflicts && attempt > 1)
         firstBase.foreach(checkKeyConflict(drop, root, _))
-      try return merge(drop, root, deleted, checks, maxChangedPerMille,
-        maxBroadcastDropKeys, zoneCluster)
+      try return publish
       catch {
         case e: ConcurrentWriteException =>
           last = e
@@ -1729,9 +1651,7 @@ object Versioned {
     * through the same fold the writers evaluate and the scan still
     * touches exactly ONE bucket partition of ONE owning directory. */
   def lookup(spark: SparkSession, root: String, keyValues: Seq[Any]): DataFrame = {
-    val live = currentManifest(root).getOrElse(sys.error(s"no live version under $root"))
-    val spec = live.buckets.getOrElse(sys.error(
-      s"live version under $root is not bucketed — lookup needs the bucket layout"))
+    val (_, spec) = liveBucketed(root, "lookup needs the bucket layout")
     val keys = spec.keys
     require(keyValues.length == keys.length,
       s"lookup needs ${keys.length} key value(s) for layout key '${spec.key}', " +
@@ -1759,18 +1679,14 @@ object Versioned {
     // answers with the layer's row, and only a miss in every layer
     // falls through to the base path below — so the serving read pays
     // at most (live layers + 1) pruned point scans, usually fewer
+    lazy val h = keyHash(spark, keyValues)
     val fromDeltas: Option[DataFrame] =
       if (spec.deltas.isEmpty) None
       else {
-        val h = keyHash(spark, keyValues)
         val layerSchema = deltaReadSchema(fields)
         spec.deltas.reverseIterator.map { dir =>
           val dirFile = new File(root, dir)
-          val excluded = readKeyBloom(dirFile).exists { case (bits, files) =>
-            !files.exists { case (rel, words) =>
-              rel.startsWith(s"bkt=$bkt/") && bloomMightContain(words, bits, h) }
-          }
-          if (excluded) None
+          if (bloomCandidates(dirFile, bkt, h).exists(_.isEmpty)) None
           else {
             val hit = spark.read.schema(layerSchema).parquet(dirFile.getPath)
               .filter(col("bkt") === bkt && keyPred)
@@ -1796,14 +1712,7 @@ object Versioned {
         // jobs); false positives only add files, the key-equality
         // filter keeps the result exact. A bloom that excludes every
         // file answers the lookup with NO job at all.
-        val keep: Option[Seq[String]] = readKeyBloom(dirFile).map { case (bits, files) =>
-          val h = keyHash(spark, keyValues)
-          files.toSeq.collect {
-            case (rel, words)
-              if rel.startsWith(s"bkt=$bkt/") && bloomMightContain(words, bits, h) => rel
-          }
-        }
-        keep match {
+        bloomCandidates(dirFile, bkt, h) match {
           case Some(Nil) => emptyFrame // provably absent: zero Spark jobs
           case Some(rels) =>
             spark.read.option("basePath", dirFile.getPath).schema(readSchema)
@@ -1830,16 +1739,12 @@ object Versioned {
     * [[vacuum]] can reclaim the whole chain outside the retention
     * window. Content is untouched — the new version reads bit-equal
     * to its parent; it is the maintenance publish between the nightly
-    * merges, exactly a table format's compaction pass. */
+    * merges, exactly a table format's compaction pass — [[rebucket]]
+    * at the live bucket count. */
   def compact(spark: SparkSession, root: String,
-      checks: Seq[Validate.Check] = Seq.empty): PromoteReport = {
-    val live = currentManifest(root).getOrElse(sys.error(s"no live version under $root"))
-    val spec = live.buckets.getOrElse(sys.error(
-      s"live version under $root is not bucketed — compact consolidates bucket stores"))
-    promoteBucketed(read(spark, root), root, spec.key, spec.numBuckets, checks,
-      zoneCols = spec.zones, keyBloomBits = spec.bloomBits,
-      zoneCluster = spec.zones.nonEmpty)
-  }
+      checks: Seq[Validate.Check] = Seq.empty): PromoteReport =
+    rebucket(spark, root,
+      liveBucketed(root, "compact consolidates bucket stores")._2.numBuckets, checks)
 
   /** Bucket-count EVOLUTION: republish the live data under the same
     * key and zone contract but `newBuckets` hash partitions — the
@@ -1847,7 +1752,7 @@ object Versioned {
     * creation-time bucket count, which [[promoteBucketed]] otherwise
     * fixes forever (a 100×-grown table keeps its original per-bucket
     * file growth with no remedy short of this). Mechanically it is
-    * [[compact]] with a new contract: one claim-disciplined rewrite
+    * [[promoteBucketed]] of the live data: one claim-disciplined rewrite
     * publishing a NEW version whose [[BucketSpec]] carries the new
     * count and every bucket owned by the new directory. Readers are
     * never torn — a reader mid-rebucket stays pinned to the manifest
@@ -1861,9 +1766,7 @@ object Versioned {
   def rebucket(spark: SparkSession, root: String, newBuckets: Int,
       checks: Seq[Validate.Check] = Seq.empty): PromoteReport = {
     require(newBuckets > 0)
-    val live = currentManifest(root).getOrElse(sys.error(s"no live version under $root"))
-    val spec = live.buckets.getOrElse(sys.error(
-      s"live version under $root is not bucketed — rebucket evolves bucket layouts"))
+    val (_, spec) = liveBucketed(root, "rebucket evolves bucket layouts")
     promoteBucketed(read(spark, root), root, spec.key, newBuckets, checks,
       zoneCols = spec.zones, keyBloomBits = spec.bloomBits,
       zoneCluster = spec.zones.nonEmpty)
@@ -1970,8 +1873,16 @@ object Versioned {
     Some((bits, m))
   }
 
-  private def bloomMightContain(words: Array[Long], bits: Int, h1: Long): Boolean =
-    graft.sketch.BloomFilter.mightContainWords(words, bits, BloomHashes, h1)
+  /** The files of bucket `bkt` in `dir` whose key-Bloom sidecar
+    * might hold key hash `h` (relative paths); None when the directory
+    * has no sidecar. */
+  private def bloomCandidates(dir: File, bkt: Int, h: Long): Option[Seq[String]] =
+    readKeyBloom(dir).map { case (bits, files) =>
+      files.toSeq.collect {
+        case (rel, words) if rel.startsWith(s"bkt=$bkt/") &&
+          graft.sketch.BloomFilter.mightContainWords(words, bits, BloomHashes, h) => rel
+      }
+    }
 
   /** `lo ≤ c ≤ hi` over a bucketed, zone-mapped table: each owning
     * directory's `_zonemap` is consulted BEFORE the scan, so files
@@ -2008,17 +1919,17 @@ object Versioned {
   def readRangeAll(spark: SparkSession, root: String,
       preds: Seq[(String, Any, Any)]): DataFrame = {
     require(preds.nonEmpty, "readRangeAll needs at least one (column, lo, hi) predicate")
-    val m = currentManifest(root).getOrElse(sys.error(s"no live version under $root"))
+    val m = liveManifest(root)
     val residual = preds.map { case (c, lo, hi) => col(c) >= lit(lo) && col(c) <= lit(hi) }
       .reduce(_ && _)
     m.buckets match {
       case None => readManifestData(spark, root, m).filter(residual)
       case Some(spec) =>
-        val byDir = spec.owner.zipWithIndex.filter(_._1.nonEmpty).groupBy(_._1)
+        val byDir = ownersOf(spec, spec.owner.indices)
         require(byDir.nonEmpty || spec.deltas.nonEmpty,
           s"bucketed table under $root has no non-empty buckets")
-        val parts = byDir.toSeq.sortBy(_._1).map { case (dir, entries) =>
-          prunedDirScan(spark, root, dir, Some(entries.map(_._2)), preds, residual)
+        val parts = byDir.map { case (dir, bs) =>
+          prunedDirScan(spark, root, dir, Some(bs), preds, residual)
         }
         val base = parts.reduceOption(_.unionByName(_, allowMissingColumns = true))
         val unioned = spec.deltas match {
@@ -2132,7 +2043,7 @@ object Versioned {
     * the chain length. Manifest-only: no data files are opened. */
   def describe(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
-    val m = currentManifest(root).getOrElse(sys.error(s"no live version under $root"))
+    val m = liveManifest(root)
     val chain = versions(root)
     val base = Seq(
       "version" -> m.version.toString,
@@ -2209,7 +2120,7 @@ object Versioned {
     * with time travel). The rolled-back-from version stays readable
     * via [[readVersion]] for post-mortems until vacuumed. */
   def rollback(root: String, toVersion: Int): Manifest = {
-    val live = currentManifest(root).getOrElse(sys.error(s"no live version under $root"))
+    val live = liveManifest(root)
     require(toVersion != live.version, s"version $toVersion is already live")
     val target = versions(root).find(_.version == toVersion)
       .getOrElse(sys.error(s"version $toVersion was never published under $root"))
@@ -2228,7 +2139,7 @@ object Versioned {
   /** One-step rollback: re-publish the live version's `previous`
     * directory as the new version. */
   def rollback(root: String): Manifest = {
-    val live = currentManifest(root).getOrElse(sys.error(s"no live version under $root"))
+    val live = liveManifest(root)
     val prev = live.previous.getOrElse(sys.error(s"version ${live.version} has no previous"))
     // resolve through the chain so a bucketed previous version's owner
     // map rides along; pre-chain tables fall back to the bare path
@@ -2265,7 +2176,7 @@ object Versioned {
   def vacuum(root: String, retainLast: Int = 2,
       staleStagingMillis: Long = 24L * 3600 * 1000): Seq[String] = {
     require(retainLast >= 1, "retainLast must be >= 1")
-    val m = currentManifest(root).getOrElse(sys.error(s"no live version under $root"))
+    val m = liveManifest(root)
     val chain = versions(root)
     val retained = chain.sortBy(-_.version).take(retainLast) :+ m
     // a retained bucketed version needs every directory its owner map

@@ -238,6 +238,21 @@ class DedupSpec extends SparkSpecBase {
     }
   }
 
+  test("connectedComponentsBounded: a true bound matches the probe path; a negative one is refused") {
+    import graft.dedup.Components
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
+    val probed = Components.connectedComponents(pairs, "doc_a", "doc_b")
+      .as[(Long, Long)].collect().toMap
+    for (bound <- Seq(3L, 0L))
+      assert(Components.connectedComponentsBounded(pairs, "doc_a", "doc_b", bound, localThreshold = 2L)
+        .as[(Long, Long)].collect().toMap === probed, s"maxEdges=$bound")
+    // a negative bound can only undercount: it would silently route any
+    // graph through the single-task union-find
+    val e = intercept[IllegalArgumentException](
+      Components.connectedComponentsBounded(pairs, "doc_a", "doc_b", -1L))
+    assert(e.getMessage.contains("maxEdges"), e.getMessage)
+  }
+
   test("componentSizes: histogram, member mass and exact shares") {
     import graft.dedup.Components
     // sizes: {1,2,3,4}=4, {10,11,12}=3, {20,21}=2, {30,31}=2 → 11 docs

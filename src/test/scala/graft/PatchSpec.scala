@@ -340,8 +340,11 @@ class PatchSpec extends SparkSpecBase {
           refuseKeyConflicts = true).patched)
         catch { case t: Throwable => Left(t) }
       })
+    // both writers start together, so both resolve the same live
+    // version: a stagger let a warm one-row patch (~250 ms) commit
+    // before the second writer started, and that writer then derived
+    // its drop from the new version — no race to refuse
     val f1 = attempt(dA)
-    Thread.sleep(300)
     val f2 = attempt(dB)
     val results = Seq(f1.get(), f2.get())
     pool.shutdown()
